@@ -45,7 +45,9 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.fun
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
     check_not_torn,
-    swap_partition_dirs,
+    delete_keys,
+    merge_keys,
+    write_json,
 )
 
 IVF_META = "_ivf_meta.json"
@@ -542,26 +544,25 @@ def write_ivf_index(
         .parquet(path)
     )
     n_rows = int(obs.get["n"])
-    with open(os.path.join(path, IVF_META), "w") as f:
-        json.dump(
-            {
-                "metric": metric,
-                "compression": compression,
-                "n_centroids": len(centroids),
-                # the full build-time quantizer (k·dim doubles — small
-                # by construction) + its content hash: upserts after a
-                # process restart recover the EXACT centroids instead
-                # of re-deriving different ones from the mutated corpus
-                "centroids": [
-                    [int(cid), [float(x) for x in vec]] for cid, vec in centroids
-                ],
-                "centroid_hash": _centroid_hash(centroids),
-                "vec_col": vec_col,
-                "rows_at_build": n_rows,
-                "upserted_since_build": 0,
-            },
-            f,
-        )
+    write_json(
+        os.path.join(path, IVF_META),
+        {
+            "metric": metric,
+            "compression": compression,
+            "n_centroids": len(centroids),
+            # the full build-time quantizer (k·dim doubles — small by
+            # construction) + its content hash: upserts after a process
+            # restart recover the EXACT centroids instead of
+            # re-deriving different ones from the mutated corpus
+            "centroids": [
+                [int(cid), [float(x) for x in vec]] for cid, vec in centroids
+            ],
+            "centroid_hash": _centroid_hash(centroids),
+            "vec_col": vec_col,
+            "rows_at_build": n_rows,
+            "upserted_since_build": 0,
+        },
+    )
 
 
 def _compress_int8(assigned: DataFrame, vec_col: str) -> DataFrame:
@@ -638,17 +639,13 @@ def upsert_ivf_index(
     1. assign each record to its nearest centroid (GEMM kernel by
        default; expression form with ``fast=False`` for bit-exact
        oracle parity) — a narrow map, no shuffle;
-    2. find the partitions holding OLD versions of the upserted ids
-       with a broadcast semi-join of the (tiny) id batch against the
-       layout's ``(id, centroid_id)`` columns — column-pruned scan,
-       parquet row-group stats skip files whose id range can't match;
-       at 100 TB co-maintain the id→centroid pair in the id-bucketed
-       flat index instead, making this lookup O(|batch|);
-    3. rewrite only the union of old+new partitions: surviving rows
-       (anti-join on id, batch side broadcast) ∪ newly assigned rows,
-       one output file per touched partition;
-    4. crash-consistent marker-fenced swap (``sources.layout``), then
-       bump the sidecar's staleness counter.
+    2. ``sources.layout.merge_keys`` rewrites only the partitions of
+       the new rows and of the OLD versions of their ids (found by a
+       broadcast join against the layout's column-pruned
+       ``(id, centroid_id)`` scan; at 100 TB co-maintain the
+       id→centroid pair in the id-bucketed flat index instead, making
+       this lookup O(|batch|)), then bump the sidecar's staleness
+       counter.
 
     Metric and compression are read from the sidecar, so the merged
     partitions are produced by the same kernels as the original build.
@@ -703,36 +700,12 @@ def upsert_ivf_index(
     n_new = assigned.count()
     if n_new == 0:
         return {"touched": [], "n_upserted": 0, "staleness": ivf_staleness(path)}
-    ids = assigned.select(id_col).distinct()
-    layout = spark.read.parquet(path)
-    new_parts = {
-        r["centroid_id"]
-        for r in assigned.select("centroid_id").distinct().collect()
-    }
-    old_parts = {
-        r["centroid_id"]
-        for r in layout.join(F.broadcast(ids), id_col)
-        .select("centroid_id")
-        .distinct()
-        .collect()
-    }
-    touched = sorted(new_parts | old_parts)
-    survivors = layout.filter(F.col("centroid_id").isin(touched)).join(
-        F.broadcast(ids), id_col, "left_anti"
-    )
     fresh = _compress_int8(assigned, vec_col) if compression == "int8" else assigned
-    merged = survivors.unionByName(fresh.select(*survivors.columns))
-    tmp = path.rstrip("/") + "._tmp"
-    (
-        merged.repartition(len(touched), F.col("centroid_id"))
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(tmp)
+    touched = merge_keys(
+        spark.read.parquet(path), path, "centroid_id", fresh, id_col
     )
-    swap_partition_dirs(path, tmp, [f"centroid_id={c}" for c in touched])
     meta["upserted_since_build"] = int(meta.get("upserted_since_build", 0)) + n_new
-    with open(os.path.join(path, IVF_META), "w") as f:
-        json.dump(meta, f)
+    write_json(os.path.join(path, IVF_META), meta)
     return {
         "touched": touched,
         "n_upserted": n_new,
@@ -747,13 +720,10 @@ def delete_ivf_ids(
     id_col: str = "vec_id",
 ) -> dict:
     """Right-to-be-forgotten / takedown propagation for the float IVF
-    layout — same touched-partition discipline as
-    :func:`upsert_ivf_index`: a broadcast semi-join finds the
-    centroid partitions that HOLD the ids (column-pruned scan), only
-    those are re-merged via anti-join and crash-consistently swapped
-    (a partition emptied by the delete disappears from the layout);
-    untouched partitions stay byte-identical. Deleting absent ids is
-    a no-op. Deletions count into ``deleted_since_build`` — quantizer
+    layout: only the centroid partitions that HOLD the ids are
+    rewritten (a partition emptied by the delete disappears from the
+    layout); untouched partitions stay byte-identical. Deleting absent
+    ids is a no-op. Deletions count into ``deleted_since_build`` — quantizer
     drift exactly like upserts — so :func:`ivf_staleness` fires the
     retrain policy on churn, not only growth. Composes with
     ``VectorIndex.delete_ids`` / ``LexicalIndex.delete_docs`` /
@@ -769,34 +739,15 @@ def delete_ivf_ids(
         )
     else:
         ids_df = ids.select(F.col(ids.columns[0]).alias(id_col))
-    ids_df = ids_df.distinct().localCheckpoint(eager=True)
-    layout = spark.read.parquet(path)
-    hits = (
-        layout.join(F.broadcast(ids_df), id_col)
-        .groupBy("centroid_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
+    touched, n_deleted = delete_keys(
+        spark.read.parquet(path), path, "centroid_id", ids_df, id_col
     )
-    touched = sorted(int(r["centroid_id"]) for r in hits)
-    n_deleted = int(sum(r["n"] for r in hits))
     if not touched:
         return {"touched": [], "n_deleted": 0, "staleness": ivf_staleness(path)}
-    survivors = layout.filter(F.col("centroid_id").isin(touched)).join(
-        F.broadcast(ids_df), id_col, "left_anti"
-    )
-    tmp = path.rstrip("/") + "._tmp"
-    (
-        survivors.repartition(len(touched), F.col("centroid_id"))
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(tmp)
-    )
-    swap_partition_dirs(path, tmp, [f"centroid_id={c}" for c in touched])
     meta["deleted_since_build"] = (
         int(meta.get("deleted_since_build", 0)) + n_deleted
     )
-    with open(os.path.join(path, IVF_META), "w") as f:
-        json.dump(meta, f)
+    write_json(os.path.join(path, IVF_META), meta)
     return {
         "touched": touched,
         "n_deleted": n_deleted,

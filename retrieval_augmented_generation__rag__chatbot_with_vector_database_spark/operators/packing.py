@@ -249,8 +249,11 @@ def write_training_shards(
     :func:`read_training_shard` refuses a manifest-less layout, so a
     crashed export is never silently served.
     """
-    import json
     import os
+
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
+        write_json,
+    )
 
     for c in ("shard", "seq", "offset", "size"):
         if c not in packed_docs.columns:
@@ -279,8 +282,7 @@ def write_training_shards(
             for r in stats
         },
     }
-    with open(os.path.join(path, "_manifest.json"), "w") as f:
-        json.dump(manifest, f)
+    write_json(os.path.join(path, "_manifest.json"), manifest)
 
 
 def read_training_shard(spark, path: str, shard: int) -> DataFrame:

@@ -42,6 +42,10 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
+    write_json,
+)
+
 PQ_META = "_pq_meta.json"
 
 
@@ -446,9 +450,9 @@ def write_pq_index(
     pq_encode(index, codebooks, id_col, vec_col).write.mode("overwrite").parquet(
         path
     )
-    with open(os.path.join(path, PQ_META), "w") as f:
-        json.dump({"m": len(codebooks), "k": len(codebooks[0]),
-                   "sub": len(codebooks[0][0]), "codebooks": codebooks}, f)
+    write_json(os.path.join(path, PQ_META),
+               {"m": len(codebooks), "k": len(codebooks[0]),
+                "sub": len(codebooks[0][0]), "codebooks": codebooks})
 
 
 def load_pq_codebooks(path: str) -> list[list[list[float]]]:
@@ -877,28 +881,25 @@ def write_ivfpq_index(
         .parquet(path)
     )
     n_rows = int(obs.get["n"])
-    with open(os.path.join(path, IVFPQ_META), "w") as f:
-        json.dump(
-            {
-                "m": len(codebooks),
-                "k": len(codebooks[0]),
-                "centroids": [
-                    [int(c), [float(x) for x in v]] for c, v in centroids
-                ],
-                "codebooks": codebooks,
-                "rows_at_build": n_rows,
-                "upserted_since_build": 0,
-                "residual": residual,
-                "normalize": normalize,
-                "mips": mips,
-                "mips_max_norm": max_norm,
-                "stores_vectors": store_vectors,
-                "vec_col": vec_col if store_vectors else None,
-                "meta_cols": meta_cols,
-                "rotation": rotation,
-            },
-            f,
-        )
+    write_json(
+        os.path.join(path, IVFPQ_META),
+        {
+            "m": len(codebooks),
+            "k": len(codebooks[0]),
+            "centroids": [[int(c), [float(x) for x in v]] for c, v in centroids],
+            "codebooks": codebooks,
+            "rows_at_build": n_rows,
+            "upserted_since_build": 0,
+            "residual": residual,
+            "normalize": normalize,
+            "mips": mips,
+            "mips_max_norm": max_norm,
+            "stores_vectors": store_vectors,
+            "vec_col": vec_col if store_vectors else None,
+            "meta_cols": meta_cols,
+            "rotation": rotation,
+        },
+    )
 
 
 def _with_residual(
@@ -974,7 +975,7 @@ def delete_ivfpq_ids(
     """
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
         check_not_torn,
-        swap_partition_dirs,
+        delete_keys,
     )
 
     check_not_torn(path)
@@ -985,38 +986,19 @@ def delete_ivfpq_ids(
         )
     else:
         ids_df = ids.select(F.col(ids.columns[0]).alias(id_col))
-    ids_df = ids_df.distinct().localCheckpoint(eager=True)
-    layout = spark.read.parquet(path)
-    hits = (
-        layout.join(F.broadcast(ids_df), id_col)
-        .groupBy("centroid_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
+    touched, n_deleted = delete_keys(
+        spark.read.parquet(path), path, "centroid_id", ids_df, id_col
     )
-    touched = sorted(int(r["centroid_id"]) for r in hits)
-    n_deleted = int(sum(r["n"] for r in hits))
     if not touched:
         return {
             "touched": [],
             "n_deleted": 0,
             "staleness": ivfpq_staleness(path),
         }
-    survivors = layout.filter(F.col("centroid_id").isin(touched)).join(
-        F.broadcast(ids_df), id_col, "left_anti"
-    )
-    tmp = path.rstrip("/") + "._tmp"
-    (
-        survivors.repartition(len(touched), F.col("centroid_id"))
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(tmp)
-    )
-    swap_partition_dirs(path, tmp, [f"centroid_id={c}" for c in touched])
     meta["deleted_since_build"] = (
         int(meta.get("deleted_since_build", 0)) + n_deleted
     )
-    with open(os.path.join(path, IVFPQ_META), "w") as f:
-        json.dump(meta, f)
+    write_json(os.path.join(path, IVFPQ_META), meta)
     return {
         "touched": touched,
         "n_deleted": n_deleted,
@@ -1733,7 +1715,7 @@ def upsert_ivfpq_index(
     )
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
         check_not_torn,
-        swap_partition_dirs,
+        merge_keys,
     )
 
     check_not_torn(path)
@@ -1795,13 +1777,8 @@ def upsert_ivfpq_index(
     if residual:
         # encode exactly as the build did (flag persisted in sidecar)
         enc_src, enc_col = _with_residual(assigned, centroids, vec_col)
-    enc = pq_encode(enc_src, codebooks, id_col, enc_col)
-    keep = [F.col(id_col), F.col("centroid_id")]
-    if stores_vectors:
-        lcol = meta.get("vec_col") or vec_col
-        raw = "__raw" if transformed else vec_col
-        keep.append(F.col(raw).alias(lcol))
-    for c in meta.get("meta_cols", []) or []:
+    meta_cols = meta.get("meta_cols", []) or []
+    for c in meta_cols:
         # the layout carries metadata for filtered probes; an upsert
         # without it would write NULL-metadata rows that silently
         # vanish from every filtered search
@@ -1810,40 +1787,24 @@ def upsert_ivfpq_index(
                 f"layout carries meta_cols {meta.get('meta_cols')}; "
                 f"upsert records are missing {c!r}"
             )
-        keep.append(F.col(c))
-    fresh = assigned.select(*keep).join(enc, id_col)
-
-    ids = assigned.select(id_col).distinct()
-    layout = spark.read.parquet(path)
-    new_parts = {
-        r["centroid_id"]
-        for r in assigned.select("centroid_id").distinct().collect()
-    }
-    old_parts = {
-        r["centroid_id"]
-        for r in layout.join(F.broadcast(ids), id_col)
-        .select("centroid_id")
-        .distinct()
-        .collect()
-    }
-    touched = sorted(new_parts | old_parts)
-    survivors = layout.filter(F.col("centroid_id").isin(touched)).join(
-        F.broadcast(ids), id_col, "left_anti"
+    # layout columns ride THROUGH the encode kernel, as in the build
+    # (a self-join on id would need its own broadcast job)
+    carry, keep = ["centroid_id"], [F.col(id_col), F.col("centroid_id")]
+    if stores_vectors:
+        raw = "__raw" if transformed else vec_col
+        carry.append(raw)
+        keep.append(F.col(raw).alias(meta.get("vec_col") or vec_col))
+    carry.extend(meta_cols)
+    keep.extend(F.col(c) for c in meta_cols)
+    enc = pq_encode(enc_src, codebooks, id_col, enc_col, carry_cols=carry)
+    fresh = enc.select(*keep, "codes")
+    touched = merge_keys(
+        spark.read.parquet(path), path, "centroid_id", fresh, id_col
     )
-    merged = survivors.unionByName(fresh.select(*survivors.columns))
-    tmp = path.rstrip("/") + "._tmp"
-    (
-        merged.repartition(len(touched), F.col("centroid_id"))
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(tmp)
-    )
-    swap_partition_dirs(path, tmp, [f"centroid_id={c}" for c in touched])
     meta["upserted_since_build"] = (
         int(meta.get("upserted_since_build", 0)) + n_new
     )
-    with open(os.path.join(path, IVFPQ_META), "w") as f:
-        json.dump(meta, f)
+    write_json(os.path.join(path, IVFPQ_META), meta)
     return {
         "touched": touched,
         "n_upserted": n_new,

@@ -56,7 +56,9 @@ from pyspark.sql import functions as F
 
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
     SWAP_MARKER,
-    swap_partition_dirs,
+    check_not_torn,
+    rewrite_partitions,
+    write_json,
 )
 
 PROPS_FILE = "_index_properties.json"
@@ -114,15 +116,14 @@ class VectorIndex:
         if bucket_count < 1:
             raise ValueError("bucket_count must be >= 1")
         os.makedirs(self.path, exist_ok=True)
-        with open(self._props_path, "w") as f:
-            json.dump(
-                {
-                    "dimension": dimension,
-                    "metric": metric,
-                    "bucket_count": int(bucket_count),
-                },
-                f,
-            )
+        write_json(
+            self._props_path,
+            {
+                "dimension": dimension,
+                "metric": metric,
+                "bucket_count": int(bucket_count),
+            },
+        )
         return self
 
     # -- S7: exists / describe ---------------------------------------
@@ -150,16 +151,7 @@ class VectorIndex:
         return os.path.join(self.path, SWAP_MARKER)
 
     def _check_not_torn(self) -> None:
-        if os.path.exists(self._swap_marker_path):
-            with open(self._swap_marker_path) as f:
-                marker = json.load(f)
-            raise RuntimeError(
-                f"index {self.name!r} has a torn bucket swap (marker "
-                f"{SWAP_MARKER} present, touched partitions "
-                f"{marker.get('partitions', marker.get('touched'))}); pre-swap "
-                f"data is preserved in '_old_{BUCKET_COL}=N' aside dirs under "
-                f"{self._data_path} — recover manually, then delete the marker"
-            )
+        check_not_torn(self._data_path, self._swap_marker_path)
 
     # -- S6: delete ---------------------------------------------------
     def delete(self) -> None:
@@ -256,18 +248,13 @@ class VectorIndex:
     def _write_merged(self, new: DataFrame, touched: list[int]) -> int:
         """Merge ``new`` (already bucketed + checkpointed) into the
         touched buckets and atomically swap only those directories."""
-        data = self._data_path
-        fresh = not os.path.exists(data)
+        fresh = not os.path.exists(self._data_path)
         existing = (
             self.spark.createDataFrame([], new.schema)
             if fresh
             else self._pruned_existing(touched)
         )
         merged = merge_last_write_wins(existing, new)
-        # co-locate each bucket into one task → one file per touched
-        # bucket (avoids the small-files explosion of 32 writers × 32
-        # buckets); the repartition moves only touched-bucket rows
-        tmp = data + "._tmp"
         # the returned index size rides the write as an observed
         # metric when the write IS the whole index (fresh create —
         # every ingest-funnel and throughput path): no post-write
@@ -278,32 +265,23 @@ class VectorIndex:
         # this return value is a size indicator; exact-count callers
         # should read().count() (the merge path already does).
         obs = Observation()
-        (
-            merged.observe(obs, F.count(F.lit(1)).alias("n"))
-            .repartition(max(len(touched), 1), F.col(BUCKET_COL))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(tmp)
-        )
-        if fresh:
-            os.rename(tmp, data)
-            return int(obs.get["n"])
-        # crash-consistent marker-fenced swap (sources.layout)
-        swap_partition_dirs(
-            data,
-            tmp,
-            [f"{BUCKET_COL}={b}" for b in touched],
+        rewrite_partitions(
+            merged.observe(obs, F.count(F.lit(1)).alias("n")),
+            self._data_path,
+            BUCKET_COL,
+            touched,
             self._swap_marker_path,
         )
+        if fresh:
+            return int(obs.get["n"])
         return self.read().count()
 
     # -- takedown: per-id delete -------------------------------------
     def delete_ids(self, ids: DataFrame | list[str]) -> int:
         """Right-to-be-forgotten / takedown propagation: remove the
         given ids from the index, rewriting ONLY the buckets that
-        contain them (same touched-partition discipline as
-        :meth:`upsert` — untouched buckets stay byte-identical, a
-        bucket emptied by the delete disappears from the layout).
+        contain them (untouched buckets stay byte-identical, a bucket
+        emptied by the delete disappears from the layout).
         Deleting absent ids is a no-op. Returns the number of rows
         actually deleted (the takedown-audit number) — computed inside
         the pruned scan, so the whole operation never reads an
@@ -330,18 +308,11 @@ class VectorIndex:
         n_doomed = existing.join(idf.select("id"), "id", "left_semi").count()
         if n_doomed == 0:
             return 0
-        kept = existing.join(idf.select("id"), "id", "left_anti")
-        tmp = self._data_path + "._tmp"
-        (
-            kept.repartition(max(len(touched), 1), F.col(BUCKET_COL))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(tmp)
-        )
-        swap_partition_dirs(
+        rewrite_partitions(
+            existing.join(idf.select("id"), "id", "left_anti"),
             self._data_path,
-            tmp,
-            [f"{BUCKET_COL}={b}" for b in touched],
+            BUCKET_COL,
+            touched,
             self._swap_marker_path,
         )
         return n_doomed

@@ -85,7 +85,8 @@ from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.ope
 )
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
     check_not_torn,
-    swap_partition_dirs,
+    rewrite_partitions,
+    write_json,
 )
 
 PROPS_FILE = "_lexical_properties.json"
@@ -354,18 +355,15 @@ class LexicalIndex:
                 row = stats_f.result()
         finally:
             _release_local_checkpoint(side)
-        with open(self._props_path, "w") as f:
-            json.dump(
-                {
-                    "term_buckets": term_buckets,
-                    "doc_buckets": doc_buckets,
-                    "n": int(row["n"]),
-                    "avgdl": None
-                    if row["avgdl"] is None
-                    else float(row["avgdl"]),
-                },
-                f,
-            )
+        write_json(
+            self._props_path,
+            {
+                "term_buckets": term_buckets,
+                "doc_buckets": doc_buckets,
+                "n": int(row["n"]),
+                "avgdl": None if row["avgdl"] is None else float(row["avgdl"]),
+            },
+        )
         return self
 
     # -- reads --------------------------------------------------------
@@ -411,19 +409,10 @@ class LexicalIndex:
             .agg(F.count("*").alias("df"))
             .select("term", "df", TBUCKET)
         )
-        tmp = self._termdf_path + "._tmp"
-        (
-            fresh.repartition(max(len(tbuckets), 1), F.col(TBUCKET))
-            .write.mode("overwrite").partitionBy(TBUCKET).parquet(tmp)
-        )
-        if not os.path.exists(self._termdf_path):
-            # legacy layout built before the sidecar existed: adopt it
-            # incrementally (missing buckets are treated as
-            # unblocked-by-hint at probe time, which is always safe)
-            os.makedirs(self._termdf_path, exist_ok=True)
-        swap_partition_dirs(
-            self._termdf_path, tmp, [f"{TBUCKET}={b}" for b in tbuckets]
-        )
+        # a legacy layout built before the sidecar existed adopts it
+        # incrementally (missing buckets are treated as
+        # unblocked-by-hint at probe time, which is always safe)
+        rewrite_partitions(fresh, self._termdf_path, TBUCKET, tbuckets)
 
     def doc_store(self) -> DataFrame:
         self._check_not_torn()
@@ -465,17 +454,14 @@ class LexicalIndex:
 
     def refresh_stats(self) -> None:
         """Recompute (n, avgdl) from the persisted doc store and write
-        them into the sidecar (atomic tmp+rename). Spark's ``avg`` of
+        them into the sidecar (atomically). Spark's ``avg`` of
         a long is the double sum/count quotient, so the cached value is
         bit-identical to what the fallback scan would return."""
         row = self._scan_stats().first()
         props = self.properties()
         props["n"] = int(row["n"])
         props["avgdl"] = None if row["avgdl"] is None else float(row["avgdl"])
-        tmp = self._props_path + "._tmp"
-        with open(tmp, "w") as f:
-            json.dump(props, f)
-        os.replace(tmp, self._props_path)
+        write_json(self._props_path, props)
 
     # -- incremental upsert ------------------------------------------
     def upsert(
@@ -530,16 +516,11 @@ class LexicalIndex:
         new_postings = side.select(
             "term", "id", "tf", "dl", _tbucket_of("term", tb).alias(TBUCKET)
         )
-        merged_postings = kept.select(new_postings.columns).unionByName(
-            new_postings
-        )
-        tmp_p = self._postings_path + "._tmp"
-        (
-            merged_postings.repartition(max(len(tbuckets), 1), F.col(TBUCKET))
-            .write.mode("overwrite").partitionBy(TBUCKET).parquet(tmp_p)
-        )
-        swap_partition_dirs(
-            self._postings_path, tmp_p, [f"{TBUCKET}={b}" for b in tbuckets]
+        rewrite_partitions(
+            kept.select(new_postings.columns).unionByName(new_postings),
+            self._postings_path,
+            TBUCKET,
+            tbuckets,
         )
         self._refresh_termdf(tbuckets)
 
@@ -547,16 +528,11 @@ class LexicalIndex:
         incoming = new_docs.withColumn(
             "_batch", F.lit(batch).cast("long")
         ).withColumn(DBUCKET, _dbucket_of("id", db))
-        merged_docs = _lww_docs(
-            old_in_buckets, incoming
-        )
-        tmp_d = self._docs_path + "._tmp"
-        (
-            merged_docs.repartition(max(len(dbuckets), 1), F.col(DBUCKET))
-            .write.mode("overwrite").partitionBy(DBUCKET).parquet(tmp_d)
-        )
-        swap_partition_dirs(
-            self._docs_path, tmp_d, [f"{DBUCKET}={b}" for b in dbuckets]
+        rewrite_partitions(
+            _lww_docs(old_in_buckets, incoming),
+            self._docs_path,
+            DBUCKET,
+            dbuckets,
         )
         self.refresh_stats()
 
@@ -603,32 +579,21 @@ class LexicalIndex:
         )
 
         if tbuckets:
-            kept_postings = (
+            rewrite_partitions(
                 self.postings()
                 .filter(F.col(TBUCKET).isin(tbuckets))
-                .join(idf, "id", "left_anti")
-            )
-            tmp_p = self._postings_path + "._tmp"
-            (
-                kept_postings.repartition(
-                    max(len(tbuckets), 1), F.col(TBUCKET)
-                )
-                .write.mode("overwrite").partitionBy(TBUCKET).parquet(tmp_p)
-            )
-            swap_partition_dirs(
-                self._postings_path, tmp_p,
-                [f"{TBUCKET}={b}" for b in tbuckets],
+                .join(idf, "id", "left_anti"),
+                self._postings_path,
+                TBUCKET,
+                tbuckets,
             )
             self._refresh_termdf(tbuckets)
 
-        kept_docs = old_in_buckets.join(idf, "id", "left_anti")
-        tmp_d = self._docs_path + "._tmp"
-        (
-            kept_docs.repartition(max(len(dbuckets), 1), F.col(DBUCKET))
-            .write.mode("overwrite").partitionBy(DBUCKET).parquet(tmp_d)
-        )
-        swap_partition_dirs(
-            self._docs_path, tmp_d, [f"{DBUCKET}={b}" for b in dbuckets]
+        rewrite_partitions(
+            old_in_buckets.join(idf, "id", "left_anti"),
+            self._docs_path,
+            DBUCKET,
+            dbuckets,
         )
         self.refresh_stats()
 

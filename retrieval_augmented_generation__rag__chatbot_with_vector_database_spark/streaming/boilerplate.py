@@ -189,21 +189,17 @@ def delete_line_occurrences(
     lines are derived personal data exactly like its minhash
     signature (``streaming/neardup.py``) — forgetting the doc must
     forget its ``(line, doc_id)`` rows, or the engine retains
-    fragments of the text. Touched-partition discipline: discovery
-    scan finds the ``batch_id=<n>`` dirs holding the ids, an
-    anti-join rewrites ONLY those, marker-fenced swap, idempotent.
+    fragments of the text. Rewrites ONLY the ``batch_id=<n>`` dirs
+    holding the ids; idempotent.
     The blocklist may SHRINK as a result (a line dropping below K) —
     correct by design: counts must reflect only retained documents.
     Returns ``{"n_deleted": ..., "touched": [...]}``."""
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
-        swap_partition_dirs,
+        delete_keys,
     )
 
     if isinstance(ids, (list, tuple)):
         ids = spark.createDataFrame([(int(i),) for i in ids], "doc_id long")
-    victims = ids.select(
-        F.col(ids.columns[0]).cast("long").alias("doc_id")
-    ).distinct().localCheckpoint(eager=True)
     if not os.path.isdir(counts_dir) or not any(
         e.name.startswith("batch_id=") for e in os.scandir(counts_dir)
     ):
@@ -212,27 +208,6 @@ def delete_line_occurrences(
     t = spark.read.schema(LINE_OCCURRENCE_SCHEMA).option(
         "basePath", counts_dir
     ).parquet(f"{counts_dir}/batch_id=*")
-    touched = sorted(
-        r["batch_id"]
-        for r in t.join(F.broadcast(victims), "doc_id")
-        .select("batch_id")
-        .distinct()
-        .collect()
-    )
-    if not touched:
-        return {"n_deleted": 0, "touched": []}
-    held = t.filter(F.col("batch_id").isin(touched))
-    n_before = held.count()
-    kept = held.join(
-        F.broadcast(victims), "doc_id", "left_anti"
-    ).localCheckpoint(eager=True)
-    n_kept = kept.count()
-    tmp = counts_dir.rstrip("/") + "._tmp"
-    (
-        kept.repartition(max(len(touched), 1), F.col("batch_id"))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(tmp)
-    )
-    swap_partition_dirs(counts_dir, tmp, [f"batch_id={b}" for b in touched])
-    return {"n_deleted": n_before - n_kept, "touched": touched}
+    victims = ids.select(F.col(ids.columns[0]).cast("long").alias("doc_id"))
+    touched, n_deleted = delete_keys(t, counts_dir, "batch_id", victims, "doc_id")
+    return {"n_deleted": n_deleted, "touched": touched}

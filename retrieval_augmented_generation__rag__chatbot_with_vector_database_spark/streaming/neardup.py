@@ -225,10 +225,9 @@ def delete_bucket_table_ids(
     persists one (id, signature, band-key) row per (doc, band) — a
     doc's minhash signature is derived personal data and must be
     purged with the doc. Rewrites ONLY the ``batch_id=<n>`` partitions
-    holding the victim ids (column-pruned discovery scan, anti-join
-    rewrite, marker-fenced swap — the touched-partition discipline of
-    every other layout). Deleting absent ids is a no-op, so replayed
-    takedown batches converge (idempotent, like all layout hooks).
+    holding the victim ids. Deleting absent ids is a no-op, so
+    replayed takedown batches converge (idempotent, like all layout
+    hooks).
 
     Side effect by design: a forgotten id that re-arrives later is no
     longer suppressed and will re-pair — correct, the engine has no
@@ -240,16 +239,11 @@ def delete_bucket_table_ids(
 
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
         check_not_torn,
-        swap_partition_dirs,
+        delete_keys,
     )
 
     if isinstance(ids, (list, tuple)):
         ids = spark.createDataFrame([(int(i),) for i in ids], "id long")
-    idf = (
-        ids.select(F.col(ids.columns[0]).cast("long").alias("id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
     if not os.path.exists(bucket_dir):
         return {"n_deleted": 0, "touched": []}
     check_not_torn(bucket_dir)
@@ -257,31 +251,6 @@ def delete_bucket_table_ids(
         t = spark.read.parquet(bucket_dir)
     except AnalysisException:
         return {"n_deleted": 0, "touched": []}
-    touched = sorted(
-        r["batch_id"]
-        for r in t.join(F.broadcast(idf), "id")
-        .select("batch_id")
-        .distinct()
-        .collect()
-    )
-    if not touched:
-        return {"n_deleted": 0, "touched": []}
-    held = t.filter(F.col("batch_id").isin(touched))
-    n_before = held.count()
-    # one execution of the anti-join feeds both the audit count and
-    # the rewrite (takedown counts are a compliance artifact)
-    kept = held.join(F.broadcast(idf), "id", "left_anti").localCheckpoint(
-        eager=True
-    )
-    n_kept = kept.count()
-    tmp = bucket_dir.rstrip("/") + "._tmp"
-    (
-        kept.repartition(max(len(touched), 1), F.col("batch_id"))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(tmp)
-    )
-    swap_partition_dirs(
-        bucket_dir, tmp, [f"batch_id={b}" for b in touched]
-    )
-    return {"n_deleted": n_before - n_kept, "touched": touched}
+    victims = ids.select(F.col(ids.columns[0]).cast("long").alias("id"))
+    touched, n_deleted = delete_keys(t, bucket_dir, "batch_id", victims, "id")
+    return {"n_deleted": n_deleted, "touched": touched}

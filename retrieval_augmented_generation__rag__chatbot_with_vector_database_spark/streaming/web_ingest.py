@@ -170,12 +170,10 @@ def delete_frontier_urls(
     canonicalized here with the same contract the ingest used, so the
     caller doesn't need to know the canonical form.
 
-    Touched-partition discipline (the shape of every layout hook):
-    column-pruned discovery scan finds the ``batch_id=<n>`` dirs
-    holding the victims, an anti-join rewrites ONLY those dirs, and
-    the marker-fenced swap keeps a crash detectable by
-    :func:`read_frontier`'s fence. Deleting absent URLs is a no-op, so
-    replayed takedown batches converge.
+    Only the ``batch_id=<n>`` dirs holding the victims are rewritten,
+    and a crash mid-swap stays detectable by :func:`read_frontier`'s
+    fence. Deleting absent URLs is a no-op, so replayed takedown
+    batches converge.
 
     Quota semantics — FREED, by design: the host-cap counts live
     frontier rows, so forgetting a page returns its slot and a future
@@ -190,18 +188,11 @@ def delete_frontier_urls(
         canonicalize_url,
     )
     from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources.layout import (
-        swap_partition_dirs,
+        delete_keys,
     )
 
     if isinstance(urls, (list, tuple)):
         urls = spark.createDataFrame([(u,) for u in urls], "url string")
-    victims = (
-        urls.select(
-            canonicalize_url(F.col(urls.columns[0])).alias("canonical_url")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
     if not os.path.isdir(frontier_dir) or not any(
         e.name.startswith("batch_id=") for e in os.scandir(frontier_dir)
     ):
@@ -212,30 +203,13 @@ def delete_frontier_urls(
     t = spark.read.schema(FRONTIER_SCHEMA).option(
         "basePath", frontier_dir
     ).parquet(f"{frontier_dir}/batch_id=*")
-    touched = sorted(
-        r["batch_id"]
-        for r in t.join(F.broadcast(victims), "canonical_url")
-        .select("batch_id")
-        .distinct()
-        .collect()
+    victims = urls.select(
+        canonicalize_url(F.col(urls.columns[0])).alias("canonical_url")
     )
-    if not touched:
-        return {"n_deleted": 0, "touched": []}
-    held = t.filter(F.col("batch_id").isin(touched))
-    n_before = held.count()
-    kept = held.join(
-        F.broadcast(victims), "canonical_url", "left_anti"
-    ).localCheckpoint(eager=True)
-    n_kept = kept.count()
-    tmp = frontier_dir.rstrip("/") + "._tmp"
-    (
-        kept.repartition(max(len(touched), 1), F.col("batch_id"))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(tmp)
+    touched, n_deleted = delete_keys(
+        t, frontier_dir, "batch_id", victims, "canonical_url"
     )
-    swap_partition_dirs(frontier_dir, tmp, [f"batch_id={b}" for b in touched])
-    return {"n_deleted": n_before - n_kept, "touched": touched}
+    return {"n_deleted": n_deleted, "touched": touched}
 
 
 def start_web_ingest_stream(

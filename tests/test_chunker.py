@@ -4,6 +4,8 @@ RecursiveCharacterTextSplitter(500, 50) reimplementation
 
 import hashlib
 
+import pytest
+
 from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.operators.chunker import (
     chunk_documents,
     split_text,
@@ -116,8 +118,9 @@ def test_reference_sample_docs_chunk_cleanly():
     at 500/50) with every chunk within size."""
     import pathlib
 
-    total = 0
+    total = n_docs = 0
     for p in pathlib.Path("/root/reference/data/sample_docs").glob("*.txt"):
+        n_docs += 1
         chunks = split_text(p.read_text())
         total += len(chunks)
         assert all(len(c) <= 500 for c in chunks)
@@ -125,6 +128,8 @@ def test_reference_sample_docs_chunk_cleanly():
         joined = "".join(chunks)
         for w in p.read_text().split()[:50]:
             assert w in joined
+    if n_docs == 0:
+        pytest.skip("the reference checkout's data/sample_docs corpus is absent")
     assert 30 <= total <= 200
 
 

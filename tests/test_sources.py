@@ -321,6 +321,120 @@ def test_torn_swap_detected(spark, tmp_path):
     assert idx.read().count() == 1
 
 
+# ---------------- sources.layout: the partition-rewrite write path ----------------
+
+_PRE = {0: {(0, "a"), (1, "b")}, 1: {(2, "c")}, 2: {(3, "d")}}
+# rewrite of partitions 0 (changed), 1 (emptied) and 3 (new); 2 untouched
+_POST = {0: {(0, "a2")}, 1: set(), 3: {(4, "e")}}
+_N_SWAP_STEPS = 8  # p=0: aside, in, drop aside; p=1: aside, drop; p=3: in; staging; marker
+
+
+def _write_plain_layout(spark, path):
+    rows = [(k, v, p) for p, kvs in _PRE.items() for k, v in kvs]
+    spark.createDataFrame(rows, "k long, v string, p int").write.partitionBy(
+        "p"
+    ).parquet(path)
+
+
+def _part_rows(d):
+    import os
+
+    import pyarrow.parquet as pq
+
+    if not os.path.isdir(d):
+        return set()
+    t = pq.read_table(d)
+    return set(zip(t.column("k").to_pylist(), t.column("v").to_pylist()))
+
+
+def test_swap_fence_is_exclusive(spark, tmp_path):
+    """A second writer meeting a live (or torn) marker fails before it
+    renames any live partition dir."""
+    import os
+
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources import (
+        layout,
+    )
+
+    path, staging = str(tmp_path / "t"), str(tmp_path / "staging")
+    _write_plain_layout(spark, path)
+    spark.createDataFrame([(9, "z", 0)], "k long, v string, p int").write.partitionBy(
+        "p"
+    ).parquet(staging)
+    with open(layout.marker_path_for(path), "w") as f:
+        f.write('{"partitions": ["p=0"], "tmp": "other-writer"}')
+    before = _files_md5(path)
+    with pytest.raises(FileExistsError):
+        layout.swap_partition_dirs(path, staging, ["p=0"])
+    assert _files_md5(path) == before
+    assert os.path.isdir(os.path.join(staging, "p=0"))
+
+
+@pytest.mark.parametrize("crash_at", [*range(_N_SWAP_STEPS), None])
+def test_rewrite_partitions_crash_at_every_swap_step(
+    spark, tmp_path, monkeypatch, crash_at
+):
+    """Crash injected at each filesystem step of the swap: the torn
+    layout is detected, and every touched partition is recoverable —
+    its ``_old_<part>`` aside (if present) or else its live dir holds
+    exactly the pre- or the post-rewrite rows. A clean rewrite leaves
+    no marker, aside or staging dir behind."""
+    import os
+    import shutil
+
+    from retrieval_augmented_generation__rag__chatbot_with_vector_database_spark.sources import (
+        layout,
+    )
+
+    path = str(tmp_path / "t")
+    _write_plain_layout(spark, path)
+    untouched = _files_md5(os.path.join(path, "p=2"))
+    rows = spark.createDataFrame(
+        [(k, v, p) for p, kvs in _POST.items() for k, v in kvs],
+        "k long, v string, p int",
+    )
+    steps = []
+
+    def injected(real):
+        def fs_op(target, *args, **kwargs):
+            if str(target).startswith(str(tmp_path)):
+                steps.append(target)
+                if len(steps) - 1 == crash_at:
+                    raise OSError("injected crash")
+            return real(target, *args, **kwargs)
+
+        return fs_op
+
+    monkeypatch.setattr(layout.os, "rename", injected(os.rename))
+    monkeypatch.setattr(layout.os, "remove", injected(os.remove))
+    monkeypatch.setattr(layout.shutil, "rmtree", injected(shutil.rmtree))
+    if crash_at is None:
+        layout.rewrite_partitions(rows, path, "p", sorted(_POST))
+    else:
+        with pytest.raises(OSError, match="injected crash"):
+            layout.rewrite_partitions(rows, path, "p", sorted(_POST))
+    monkeypatch.undo()
+
+    assert _files_md5(os.path.join(path, "p=2")) == untouched
+    for p in _POST:
+        versions = (_PRE.get(p, set()), _POST[p])
+        live = _part_rows(os.path.join(path, f"p={p}"))
+        aside = os.path.join(path, f"_old_p={p}")
+        if os.path.isdir(os.path.join(path, f"p={p}")):
+            assert live in versions
+        assert (_part_rows(aside) if os.path.isdir(aside) else live) in versions
+    if crash_at is not None:
+        with pytest.raises(RuntimeError, match="torn"):
+            layout.check_not_torn(path)
+        return
+    assert len(steps) == _N_SWAP_STEPS
+    layout.check_not_torn(path)
+    assert sorted(os.listdir(tmp_path)) == ["t"]  # no ._tmp-* staging sibling
+    assert not [e for e in os.listdir(path) if e.startswith("_old_")]
+    for p in (*_POST, 2):
+        assert _part_rows(os.path.join(path, f"p={p}")) == {**_PRE, **_POST}[p]
+
+
 # ---------------- JSONL corpus ingest ----------------
 
 
